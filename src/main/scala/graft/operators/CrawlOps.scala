@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions._
   * become three relational operators: canonicalize candidate URLs so
   * syntactic aliases collapse, dedup the frontier on the canonical
   * form, and emit a per-host politeness schedule (host-serial fetch
-  * slots, a fixed delay apart) that executors can obey by partitioning
-  * on host.
+  * slots, a fixed delay apart). The crawl fetch
+  * ([[graft.pipeline.ProcedurePipeline.extract]]) keeps the schedule's
+  * order — one session per host, partitioned on host — and parses on
+  * all cores; the `fetch_at_ms` slots are advisory, since the fetcher's
+  * rate floor is `FetchConfig.politenessMs`.
   *
   * All three are pure Catalyst column algebra — regexp splits, lower,
   * array_sort for the query-key sort, the two-phase prefix sum for the

@@ -83,7 +83,11 @@ final case class FetchConfig(
   *
   * One instance per partition (see [[ProcedurePipeline.extract]]): the
   * cookie jar and rate-limit clock are partition-local, mirroring the
-  * reference's one-browser-per-process model at executor scale.
+  * reference's one-browser-per-process model at executor scale. Each
+  * host is fetched by one session, serially in frontier (`_ord`) order,
+  * and parsing runs afterwards on all cores. The session opens lazily on
+  * the partition's first code. The frontier schedule's `fetch_at_ms` is
+  * advisory: this fetcher's `politenessMs` floor is the rate limit.
   *
   * ==Contract limit — JS-rendered pages (VERDICT r16 #7)==
   * The reference drives a real headless Chrome

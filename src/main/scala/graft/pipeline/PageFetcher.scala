@@ -5,16 +5,21 @@ package graft.pipeline
   * The reference drives one logged-in Selenium session sequentially
   * (`login.py:12-89`, `procedure_code.py:728,754-755` — E21/E22). Here a
   * fetcher is instantiated *per partition* inside `mapPartitions`, so N
-  * partitions fetch in parallel with one session each; the returned HTML
-  * must already contain every tab pane the parser needs (the reference's
-  * tab clicks happen inside the fetch implementation).
+  * partitions fetch in parallel with one session each, and a host's
+  * codes all go to one session in frontier (`_ord`) order; parsing runs
+  * afterwards on all cores. The session opens lazily, on a partition's
+  * first code, so a partition with nothing to fetch never logs in. The
+  * returned HTML must already contain every tab pane the parser needs
+  * (the reference's tab clicks happen inside the fetch implementation).
   *
   * Implementations must be Serializable-constructible on executors —
   * session state itself (cookies, driver handles) is created lazily in
   * `open()` on the executor, never serialized from the driver.
   */
 trait PageFetcher extends Serializable {
-  /** Called once per partition before any fetch — login, warmup (E22). */
+  /** Called once per partition before its first fetch — login, warmup
+    * (E22). Never called for a partition with no codes.
+    */
   def open(): Unit = ()
 
   /** Fetch the fully-expanded page HTML for one code; null/None on 404
@@ -24,7 +29,9 @@ trait PageFetcher extends Serializable {
     */
   def fetch(code: String): String
 
-  /** Called once per partition after the last fetch — teardown. */
+  /** Called once per partition after the last fetch, only if [[open]]
+    * ran — teardown.
+    */
   def close(): Unit = ()
 }
 

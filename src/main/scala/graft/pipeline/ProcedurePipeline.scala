@@ -41,8 +41,9 @@ final case class ParsedPage(
 /** The reference main pipeline (`procedure_code.py:677-815`) restated
   * Spark-first, SURVEY §3.1/§7.1 step 6:
   *
-  *   codes -> clean (P1/P2) -> fetch (mapPartitions, per-partition
-  *   session) -> parse (E20 composite, pure) -> three projections
+  *   codes -> clean (P1/P2) -> fetch (mapPartitions, a host served
+  *   serially by one session) -> parse (E20 composite, pure, on all
+  *   cores) -> three projections
   *   (code row / explode(modifiers) / explode(ndc)) -> snapshot
   *   anti-join dedup (J1/J2) -> append sinks with empty guards (K1/P7).
   *
@@ -131,54 +132,78 @@ object ProcedurePipeline {
     * code's page URL (the reference's BASE_SITE + code,
     * `procedure_code.py:541`), canonicalize + dedup on the canonical
     * form ([[CrawlOps.frontierDedup]] — aliasing candidates collapse
-    * BEFORE any fetch is spent on them), and attach the per-host
-    * politeness schedule ([[CrawlOps.politenessSchedule]]) in seeded
-    * hash order (the dp31 deterministic-order convention).
+    * BEFORE any fetch is spent on them), and key each entry with `_ord`,
+    * the seeded hash of its canonical URL (the dp31 deterministic-order
+    * convention): the within-host fetch order, numeric because the
+    * schedule's two-phase rank buckets on it.
+    *
+    * @return [code, canonical_url, host, _ord]
+    */
+  private def dedupedFrontier(codes: DataFrame, baseSite: String): DataFrame = {
+    val withUrl = CleanOps.cleanCodes(codes).select(col("code"))
+      .withColumn("url", concat(lit(baseSite), col("code")))
+    CrawlOps.frontierDedup(withUrl, "url", "code")
+      .select(col("first_key").as("code"), col("canonical_url"), col("host"),
+        expr("xxhash64(canonical_url) & 9223372036854775807").as("_ord"))
+  }
+
+  /** The deduped frontier with its per-host politeness schedule
+    * ([[CrawlOps.politenessSchedule]]): `seq` is the 1-based rank of
+    * `_ord` within the host — the order [[extract]] fetches in — and
+    * `fetch_at_ms` the slot `delayMs` apart. The slot is advisory:
+    * [[extract]] fetches straight off the deduped frontier in `_ord`
+    * order and never reads it, and the fetcher's own rate floor is
+    * [[FetchConfig.politenessMs]].
     *
     * @return [code, canonical_url, host, seq, fetch_at_ms]
     */
   def frontierSchedule(codes: DataFrame, baseSite: String,
-      delayMs: Long = 1000L): DataFrame = {
-    val withUrl = CleanOps.cleanCodes(codes).select(col("code"))
-      .withColumn("url", concat(lit(baseSite), col("code")))
-    val deduped = CrawlOps.frontierDedup(withUrl, "url", "code")
-      .withColumnRenamed("first_key", "code")
-      // numeric within-host order key for the two-phase rank (the
-      // prefix sum buckets on div): seeded hash of the canonical URL
-      .withColumn("_ord", expr("xxhash64(canonical_url) & 9223372036854775807"))
-    CrawlOps.politenessSchedule(deduped, "host", "_ord", delayMs)
+      delayMs: Long = 1000L): DataFrame =
+    CrawlOps.politenessSchedule(dedupedFrontier(codes, baseSite), "host", "_ord", delayMs)
       .select(col("code"), col("canonical_url"), col("host"),
         col("seq"), col("fetch_at_ms"))
-  }
 
-  /** clean -> frontier (canonical dedup + politeness order) -> fetch ->
-    * parse. The fetch is the only side-effecting, nondeterministic
-    * stage; it lives in one mapPartitions with a per-partition session
-    * (E22 semantics). `fetchPartitions` bounds the number of concurrent
-    * sessions, and the frontier's host rides the repartition key with
-    * codes sorted by schedule slot within each partition — one
-    * partition's session visits a host serially, in schedule order
-    * (distributed politeness, SURVEY §7.3; the reference's
-    * between-request sleeps, `procedure_code.py:256-263`, become the
-    * schedule's fetch_at_ms column).
+  /** clean -> deduped frontier -> fetch -> parse. The fetch is the only
+    * side-effecting, nondeterministic stage; it lives in one
+    * mapPartitions with one session per partition (E22 semantics).
+    * `fetchPartitions` bounds the number of concurrent sessions, and the
+    * frontier's host rides the repartition key with codes sorted by
+    * `_ord` within each host — one session visits a host serially, in
+    * [[frontierSchedule]]'s `seq` order (distributed politeness, SURVEY
+    * §7.3; the reference's between-request sleeps,
+    * `procedure_code.py:256-263`, become the fetcher's
+    * [[FetchConfig.politenessMs]] floor). A partition opens its session
+    * only when it has a code to fetch, so a partition that gets no host
+    * never logs in.
+    *
+    * Parsing runs on all cores: the fetched `(code, html)` pairs are
+    * hash-repartitioned by code into `defaultParallelism` partitions
+    * before `parsePage`, so a one-host crawl does not parse every page in
+    * its one fetch task. The explicit count is load-bearing — it makes
+    * the exchange a REPARTITION_BY_NUM, which AQE does not coalesce back
+    * into one task; hashing on code keeps task retries deterministic.
     */
   def extract(spark: SparkSession, codes: DataFrame, fetcher: PageFetcher,
       fetchPartitions: Int = 8,
       baseSite: String = "https://codes.example/"): Dataset[ParsedPage] = {
     import spark.implicits._
-    val ordered = frontierSchedule(codes, baseSite)
+    val ordered = dedupedFrontier(codes, baseSite)
       .repartition(fetchPartitions, col("host"))
-      .sortWithinPartitions(col("host"), col("seq"))
+      .sortWithinPartitions(col("host"), col("_ord"), col("code"))
       .select("code").as[String]
     ordered
       .mapPartitions { it =>
-        fetcher.open()
-        val out = it.map(code => (code, fetcher.fetch(code)))
-        new Iterator[(String, String)] {
-          def hasNext: Boolean = { val h = out.hasNext; if (!h) fetcher.close(); h }
-          def next(): (String, String) = out.next()
+        if (!it.hasNext) Iterator.empty
+        else {
+          fetcher.open()
+          val out = it.map(code => (code, fetcher.fetch(code)))
+          new Iterator[(String, String)] {
+            def hasNext: Boolean = { val h = out.hasNext; if (!h) fetcher.close(); h }
+            def next(): (String, String) = out.next()
+          }
         }
       }
+      .repartition(spark.sparkContext.defaultParallelism, col("_1"))
       .flatMap { case (code, html) => parsePage(code, html) }
   }
 

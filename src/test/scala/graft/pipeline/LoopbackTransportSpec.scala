@@ -48,11 +48,20 @@ class LoopbackTransportSpec extends AnyFunSuite {
     </body></html>"""
   private val notFoundPage = """<html><body><div class="container404">Page not found</div></body></html>"""
 
-  test("full pipeline through JdkHttpTransport against a loopback two-step login site") {
-    // ---- server state (thread-safe: handlers run on a pool) ----
+  /** Server-side counters of one loopback site. */
+  private final class SiteCounters {
     val logins = new AtomicInteger(0)         // completed password steps
     val flakyRemaining = new AtomicInteger(1) // one 500 before success
     val fetches = new AtomicInteger(0)
+    val expired = new AtomicInteger(0)        // 401s served
+  }
+
+  /** Runs `body` against a fresh loopback site (the rules above), with a
+    * fetcher logged in as the site's one valid user.
+    */
+  private def withLoopbackSite(body: (HttpPageFetcher, SiteCounters) => Unit): Unit = {
+    // ---- server state (thread-safe: handlers run on a pool) ----
+    val site = new SiteCounters
     val emailByCookie = new ConcurrentHashMap[String, String]()
     val quotaBySession = new ConcurrentHashMap[String, AtomicInteger]()
     val preCookies = new AtomicInteger(0)
@@ -78,7 +87,8 @@ class LoopbackTransportSpec extends AnyFunSuite {
     }
 
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    server.setExecutor(pool)
     server.createContext("/login", (ex: HttpExchange) => {
       if (ex.getRequestMethod == "GET") {
         val pre = s"pre=${preCookies.incrementAndGet()}"
@@ -93,7 +103,7 @@ class LoopbackTransportSpec extends AnyFunSuite {
           case Some("btnSignIn")
               if emailByCookie.get(pre) == "crawler@example.com"
                 && fields.get("password").contains("hunter2") =>
-            val sess = s"sess=${logins.incrementAndGet()}"
+            val sess = s"sess=${site.logins.incrementAndGet()}"
             quotaBySession.put(sess, new AtomicInteger(3))
             respond(ex, 200, "<html>welcome</html>", Some(sess))
           case _ => respond(ex, 403, "bad credentials")
@@ -105,11 +115,11 @@ class LoopbackTransportSpec extends AnyFunSuite {
         Option(quotaBySession.get(s)).exists(_.getAndDecrement() > 0)
       }
       val code = ex.getRequestURI.getPath.stripPrefix("/codes/")
-      if (!live) respond(ex, 401, "session expired")
-      else if (code == "FLAKY" && flakyRemaining.getAndDecrement() > 0)
+      if (!live) { site.expired.incrementAndGet(); respond(ex, 401, "session expired") }
+      else if (code == "FLAKY" && site.flakyRemaining.getAndDecrement() > 0)
         respond(ex, 500, "transient upstream error")
       else {
-        fetches.incrementAndGet()
+        site.fetches.incrementAndGet()
         if (code == "GONE1") respond(ex, 404, notFoundPage)
         else respond(ex, 200, fullPage.replace("{code}", code))
       }
@@ -123,17 +133,27 @@ class LoopbackTransportSpec extends AnyFunSuite {
         pageUrlTemplate = s"http://127.0.0.1:$port/codes/{code}",
         email = "crawler@example.com", password = "hunter2",
         maxRetries = 3, backoffMs = 1L)
-      val fetcher = new HttpPageFetcher(config, new JdkHttpTransport())
+      body(new HttpPageFetcher(config, new JdkHttpTransport()), site)
+    } finally { server.stop(0); pool.shutdown() }
+  }
 
-      val base = Files.createTempDirectory("graft_loopback").toString
-      // 6 fetchable codes on ONE partition against a 3-fetch session
-      // quota: the run cannot finish without the 401 -> re-login path
-      val codes = Seq("0042T", "0050T", "0060T", "0070T", "FLAKY", "GONE1",
-        "  ", "false", null).toDF("code")
-      val res = ProcedurePipeline.run(spark, codes, fetcher,
-        existingModifiers = Seq.empty[String].toDF("modifier"),
-        existingNdc = Seq.empty[String].toDF("ndc_alternate_id"),
-        s"$base/codes", s"$base/modifiers", s"$base/ndc", fetchPartitions = 1)
+  // 6 fetchable codes against a 3-fetch session quota: the run cannot
+  // finish without the 401 -> re-login path
+  private def workList = Seq("0042T", "0050T", "0060T", "0070T", "FLAKY", "GONE1",
+    "  ", "false", null).toDF("code")
+
+  private def runPipeline(fetcher: HttpPageFetcher, fetchPartitions: Int): (ProcedurePipeline.PipelineResult, String) = {
+    val base = Files.createTempDirectory("graft_loopback").toString
+    val res = ProcedurePipeline.run(spark, workList, fetcher,
+      existingModifiers = Seq.empty[String].toDF("modifier"),
+      existingNdc = Seq.empty[String].toDF("ndc_alternate_id"),
+      s"$base/codes", s"$base/modifiers", s"$base/ndc", fetchPartitions)
+    (res, base)
+  }
+
+  test("full pipeline through JdkHttpTransport against a loopback two-step login site") {
+    withLoopbackSite { (fetcher, site) =>
+      val (res, base) = runPipeline(fetcher, fetchPartitions = 1)
 
       // GONE1 is a 404 page (dropped by the parser), blanks/false cleaned
       assert(res.codes == 5, s"expected 5 parsed codes, got $res")
@@ -143,11 +163,22 @@ class LoopbackTransportSpec extends AnyFunSuite {
       assert(out.columns.length == 21)
 
       // server-side proof the hard paths actually ran over the socket:
-      assert(logins.get() >= 2,
-        s"session quota forces at least one RE-login; saw ${logins.get()}")
-      assert(flakyRemaining.get() <= 0, "the transient 500 was never served")
-      assert(fetches.get() >= 6, "all codes must reach the server")
-    } finally server.stop(0)
+      assert(site.logins.get() >= 2,
+        s"session quota forces at least one RE-login; saw ${site.logins.get()}")
+      assert(site.flakyRemaining.get() <= 0, "the transient 500 was never served")
+      assert(site.fetches.get() >= 6, "all codes must reach the server")
+    }
+  }
+
+  test("one host over the default 8 fetch partitions logs in once, plus re-logins") {
+    withLoopbackSite { (fetcher, site) =>
+      val (res, _) = runPipeline(fetcher, fetchPartitions = 8)
+      assert(res.codes == 5, s"expected 5 parsed codes, got $res")
+      // the 7 partitions that get no host must not log in
+      assert(site.expired.get() >= 1, "the session quota forces a re-login")
+      assert(site.logins.get() == 1 + site.expired.get(),
+        s"${site.logins.get()} password steps for ${site.expired.get()} re-logins")
+    }
   }
 
   test("login failure through the real transport fails fast") {

@@ -1,6 +1,11 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -106,15 +111,50 @@ class ProcedurePipelineSpec extends AnyFunSuite {
     assert(ndc == Set("44444-555-66")) // snapshot id deduped
   }
 
+  /** The parsed pages, one inner array per partition. */
+  private def partitionsOf(ds: Dataset[ParsedPage]): Array[Array[ParsedPage]] =
+    ds.rdd.glom().collect()
+
   test("X1 chunk-equivalence: output invariant under fetch partitioning") {
     // SURVEY §5 item 2: the chunked execution model must not change
-    // results — same parsed output at 1 and 4 fetch partitions
-    def parse(nPartitions: Int) = ProcedurePipeline
-      .extract(spark, Seq("0042T", "D0001", "GONE1").toDF("code"), fetcher, nPartitions)
-      .collect().map(p => (p.row.code, p.row.short_description,
-        p.modifier_rows.size, p.ndc_rows.size)).toSet
-    assert(parse(1) == parse(4))
-    assert(parse(1).map(_._1) == Set("0042T", "D0001"))
+    // results — same parsed output at 1 and 4 fetch partitions, both
+    // through the parse fan-out
+    def parse(nPartitions: Int) = partitionsOf(ProcedurePipeline
+      .extract(spark, Seq("0042T", "D0001", "GONE1").toDF("code"), fetcher, nPartitions))
+    val (one, four) = (parse(1), parse(4))
+    assert(one.length == spark.sparkContext.defaultParallelism)
+    assert(four.length == spark.sparkContext.defaultParallelism)
+    assert(one.flatten.toSet == four.flatten.toSet)
+    assert(one.flatten.map(_.row.code).sorted.toSeq == Seq("0042T", "D0001"))
+  }
+
+  private val pageCodes = (1 to 40).map(i => f"${10000 + i}%05d")
+
+  /** ~50 codes on one host: blanks, padded duplicates, `#frag` and
+    * permuted-query aliases of 41 canonical pages.
+    */
+  private val aliasedWork: Seq[String] =
+    pageCodes ++ Seq("  ", "", "false", null) ++ pageCodes.take(5).map(c => s"  $c ") ++
+      pageCodes.slice(5, 8).map(_ + "#frag") ++ Seq("10009?b=2&a=1", "10009?a=1&b=2")
+
+  test("fetch order is the frontier schedule's seq order, each canonical page once") {
+    RecordingFetcher.fetched.clear()
+    ProcedurePipeline.extract(spark, aliasedWork.toDF("code"), new RecordingFetcher(fullPage))
+      .collect()
+    val fetched = RecordingFetcher.fetched.asScala.toSeq
+    val scheduled = ProcedurePipeline.frontierSchedule(aliasedWork.toDF("code"), "https://codes.example/")
+      .orderBy("seq").select("code").as[String].collect().toSeq
+    assert(fetched == scheduled)
+    assert(fetched.distinct.length == fetched.length)
+    assert(fetched.toSet == pageCodes.toSet + "10009?a=1&b=2")
+  }
+
+  test("parse fans out: a one-host frontier parses in defaultParallelism partitions") {
+    val parts = partitionsOf(ProcedurePipeline
+      .extract(spark, aliasedWork.toDF("code"), new RecordingFetcher(fullPage)))
+    assert(parts.length == spark.sparkContext.defaultParallelism)
+    assert(parts.count(_.nonEmpty) > 1, parts.map(_.length).mkString(","))
+    assert(parts.map(_.length).sum == 41)
   }
 
   test("error channel swallows its own failures and records the row") {
@@ -129,5 +169,18 @@ class ProcedurePipelineSpec extends AnyFunSuite {
     // unwritable sink path: still true (reference `:37-39`)
     assert(ErrorChannel.register(spark, "not json",
       new RuntimeException("x"), "/proc/definitely/not/writable"))
+  }
+}
+
+/** Fetch log shared by the executor threads of the local test session. */
+object RecordingFetcher {
+  val fetched = new ConcurrentLinkedQueue[String]()
+}
+
+/** Serves one page for every code and records the codes in fetch order. */
+final class RecordingFetcher(page: String) extends PageFetcher {
+  override def fetch(code: String): String = {
+    RecordingFetcher.fetched.add(code)
+    page
   }
 }
