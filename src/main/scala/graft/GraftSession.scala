@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the configuration this engine assumes.
+/** The engine's only session factory: every entry point (Bench, Verify,
+  * Run, the tools, the test suite) gets its SparkSession from [[local]],
+  * so correctness and speed are checked on identically configured
+  * sessions, and no operator sets session conf mid-run.
   *
   * Design notes (100 TB target):
   *  - AQE on: runtime re-planning (skew-join splitting, dynamic shuffle
   *    partition coalescing) is the main defence against skew at scale.
-  *  - `spark.sql.shuffle.partitions` defaults to the local core count here;
-  *    on a real cluster this is overridden to ~2-3x total executor cores
-  *    (AQE coalesces down, so over-provisioning is cheap).
+  *  - `spark.sql.shuffle.partitions` is the local core count here; under
+  *    spark-submit the factory leaves it to the submitted conf (~2-3x
+  *    total executor cores — AQE coalesces down, so over-provisioning is
+  *    cheap).
   *  - UTC session timezone: deterministic timestamp semantics across
   *    engines (the DuckDB oracle compares naive-UTC values).
   */
@@ -110,12 +114,9 @@ object GraftSession {
         else None
     }
 
-  /** Engine-wide shuffle-machinery defaults, applied by every session
-    * builder (they are core SparkConf values, only readable at context
-    * creation):
+  /** Engine-wide defaults, applied to every session the factory builds,
+    * local or under spark-submit:
     *
-    *  - [[scratchDir]] → `spark.local.dir` (no-op when unset or when a
-    *    cluster manager already owns local dirs).
     *  - `spark.shuffle.sort.bypassMergeThreshold=0`: always use the
     *    sort-based shuffle writer, never the bypass-merge writer. The
     *    bypass writer creates one file PER REDUCER per map task and
@@ -131,10 +132,20 @@ object GraftSession {
     *    strictly better for this engine's many-small-stage shape at
     *    every scale (map-side aggregation already bypasses the bypass
     *    writer anyway).
+    *  - `canChangeCachedPlanOutputPartitioning=false` (see below).
+    *  - UTC session zone: `Catalog`, [[graft.sources.Tables.normalizeTs]]
+    *    and the oracle all compare naive-UTC values.
+    *  - `spark.sql.legacy.parquet.nanosAsLong=true`: older corpora store
+    *    `events.ts` as TIMESTAMP(NANOS), which Spark's parquet reader
+    *    rejects unless it reads them as raw Long;
+    *    [[graft.sources.Tables.normalizeTs]] maps that Long back onto
+    *    TimestampType. Declared here so no operator sets it mid-run.
+    *  - `spark.sql.cteRecursionLevelLimit=10000`: the month-spine
+    *    recursive CTE spans ~80 months, near Spark's default cap of
+    *    100 levels; a wider date range must not silently hit it.
     */
-  def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder = {
-    val withScratch = scratchDir.fold(b)(d => b.config("spark.local.dir", d))
-    withScratch.config("spark.shuffle.sort.bypassMergeThreshold", "0")
+  private def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "0")
       // round 19, measured BOTH ways with full-catalog benches: with this
       // TRUE, consumers of a cached relation must plan its partitioning
       // as unknown and AQE repairs the plan per query stage at runtime —
@@ -146,14 +157,17 @@ object GraftSession {
       // materializeLargeBy) feed same-keyed joins/aggs with no Exchange
       // at plan time — total 245.2 s vs the 268.8 s round-start
       // baseline, and the regressed families recovered. Kept explicit
-      // (not just Spark's default) with an env override because the
-      // keyed-handle design DEPENDS on this staying false; the
-      // partition-count adaptivity the true setting would have provided
-      // lives in Exec.materializeForSelfJoinBy's measured-size
-      // repartition instead.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-  }
+      // (not just Spark's default) because the keyed-handle design
+      // DEPENDS on this staying false; the partition-count adaptivity
+      // the true setting would have provided lives in
+      // Exec.materializeForSelfJoinBy's measured-size repartition.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.cteRecursionLevelLimit", "10000")
 
   /** Total bytes under `path` (recursive) — the input-size probe feeding
     * [[initialPartitions]]. Cheap: a file-metadata walk, no reads.
@@ -169,21 +183,32 @@ object GraftSession {
     }
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-      inputBytes: Long = 0L): SparkSession = {
-    val spark = withEngineDefaults(SparkSession
-      .builder())
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitions(cores, inputBytes).toString)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** Core count of a local session: `SPARK_GRAFT_CPUS` when it holds a
+    * positive integer, otherwise every core the JVM sees.
+    */
+  private[graft] def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The one place a session is built. Under spark-submit (`spark.master`
+    * already set) the cluster manager owns the master, the scratch dirs
+    * and the parallelism, so only the engine defaults are applied.
+    * Standalone, the session is `local[cores]` with the scratch dir,
+    * `cores` shuffle partitions and [[initialPartitions]] sized to
+    * `inputBytes`. A session already running in this JVM is returned
+    * with these SQL confs applied to it.
+    */
+  def local(cores: Int = defaultCores, inputBytes: Long = 0L): SparkSession = {
+    val b = withEngineDefaults(SparkSession.builder().appName("graft"))
+    val spark =
+      if (sys.props.contains("spark.master")) b.getOrCreate()
+      else scratchDir.fold(b)(d => b.config("spark.local.dir", d))
+        .master(s"local[$cores]")
+        .config("spark.sql.shuffle.partitions", cores.toString)
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+          initialPartitions(cores, inputBytes).toString)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

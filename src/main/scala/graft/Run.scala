@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
 /** One-command product face (VERDICT r17 #7): run any named catalog
   * query against a user-supplied parquet directory without reading
@@ -12,17 +15,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   graft.Run <query-name> --data /path/to/tables [--out DIR] [--show N]
   * java -cp ... graft.Run list [pattern]     # catalog inventory
   * java -cp ... graft.Run entry              # flagship smoke query
+  * java -cp ... graft.Run q1,q2,...|all --explain [--out DIR]  # plans
   * }}}
   *
   * `--data` must hold the engine's table layout: one parquet file/dir per
   * table name (`region nation customer supplier part orders lineitem
   * events documents embeddings`). With `--out` the result is written as
   * parquet (distributed write — the scale path); otherwise the first
-  * `--show` rows (default 20) print to stdout.
+  * `--show` rows (default 20) print to stdout. With `--explain` nothing
+  * executes: each named query's formatted physical plan prints, or with
+  * `--out DIR` lands in `DIR/<query>.txt`.
   *
   * The same entry point works under spark-submit on a real cluster:
   * `spark-submit --class graft.Run <jar> <query> --data s3://... --out
-  * s3://...` — GraftSession.local is only used when no master is set.
+  * s3://...` — GraftSession.local keeps the master spark-submit set.
   */
 object Run {
 
@@ -50,6 +56,8 @@ object Run {
       }
     }
     positional.toList match {
+      case cmd :: Nil if !explain && (cmd == "all" || cmd.contains(",")) =>
+        Left(s"a query list or `all` needs --explain\n$usage")
       case cmd :: Nil => Right(Args(cmd, data, out, show, explain))
       case "list" :: pat :: Nil => Right(Args(s"list:$pat", data, out, show, explain))
       case other => Left(s"expected one query name, got: ${other.mkString(" ")}\n$usage")
@@ -60,9 +68,11 @@ object Run {
     """usage: graft.Run <query-name> [--data DIR] [--out DIR] [--show N] [--explain]
       |       graft.Run list [pattern]   — print catalog query names
       |       graft.Run entry            — flagship smoke query
+      |       graft.Run <q1,q2,...|all> --explain [--out DIR]
       |--explain prints the optimized physical plan (explain "formatted":
       |scan pushdowns, join strategies, whole-stage codegen spans) instead
-      |of executing. Query names: see `graft.Run list`; data dir must hold
+      |of executing; with --out DIR each plan goes to DIR/<query>.txt.
+      |Query names: see `graft.Run list`; data dir must hold
       |the standard parquet tables (region nation customer supplier part
       |orders lineitem events documents embeddings).""".stripMargin
 
@@ -94,24 +104,41 @@ object Run {
         }
     }
 
+  /** `--explain`: the formatted physical plan of each query in the
+    * command (one name, a comma list, or `all`), written to
+    * `DIR/<query>.txt` with `--out DIR`, else printed.
+    */
+  private[graft] def explain(spark: SparkSession, a: Args): Unit = {
+    val names =
+      if (a.command == "all") SparkEntry.queries.keys.toSeq.sorted
+      else a.command.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    a.out.foreach(dir => Files.createDirectories(Paths.get(dir)))
+    names.foreach { n =>
+      execute(spark, a.copy(command = n)).foreach { df =>
+        val plan = df.queryExecution.explainString(FormattedMode)
+        a.out match {
+          case Some(dir) => Files.writeString(Paths.get(dir, s"$n.txt"), plan)
+          case None      => println(plan)
+        }
+      }
+    }
+  }
+
   def main(argv: Array[String]): Unit = parse(argv) match {
     case Left(msg) =>
       System.err.println(msg)
       sys.exit(2)
     case Right(a) =>
-      // under spark-submit the master is already set — defer to it;
-      // standalone, build the tuned local session sized to the input
-      val spark =
-        if (sys.props.contains("spark.master"))
-          SparkSession.builder().appName("graft").getOrCreate()
-        else GraftSession.local(inputBytes = GraftSession.dirBytes(a.data))
-      try execute(spark, a).foreach { df =>
-        (a.explain, a.out) match {
-          case (true, _) => df.explain("formatted")
-          case (_, Some(dir)) =>
-            df.write.mode("overwrite").parquet(dir)
-            println(s"wrote ${spark.read.parquet(dir).count()} rows to $dir")
-          case _ => df.show(a.show, truncate = false)
+      val spark = GraftSession.local(inputBytes = GraftSession.dirBytes(a.data))
+      try {
+        if (a.explain) explain(spark, a)
+        else execute(spark, a).foreach { df =>
+          a.out match {
+            case Some(dir) =>
+              df.write.mode("overwrite").parquet(dir)
+              println(s"wrote ${spark.read.parquet(dir).count()} rows to $dir")
+            case None => df.show(a.show, truncate = false)
+          }
         }
       } catch {
         case e: IllegalArgumentException =>

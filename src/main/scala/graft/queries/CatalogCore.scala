@@ -2873,10 +2873,8 @@ private[queries] trait CatalogCore extends CatalogShared {
     ORDER BY s.ym"""),
     (s, d) => {
       Tables.registerAll(s, d)
-      // the corpus spans ~80 months — near Spark's default recursion
-      // cap of 100 levels; raise it so a wider date range cannot
-      // silently hit the ceiling
-      s.conf.set("spark.sql.cteRecursionLevelLimit", "10000")
+      // the corpus spans ~80 months, near Spark's default recursion cap
+      // of 100 levels; GraftSession raises the cap for every session
       s.sql("""
         WITH RECURSIVE bounds AS (
           SELECT cast(min(year(o_orderdate)*12 + month(o_orderdate) - 1) as int) AS lo,

@@ -21,15 +21,13 @@ object Tables {
   }
 
   /** Older driver corpora store `events.ts` as nanosecond-precision
-    * parquet, which Spark's reader rejects (TIMESTAMP(NANOS) unsupported)
-    * — `nanosAsLong` reads those as raw Long. Newer corpora store a
+    * parquet, which every factory-built session reads as raw Long (see
+    * [[graft.GraftSession]]). Newer corpora store a
     * native µs timestamp (pandas `timestamp[us]`, no UTC adjustment →
     * TIMESTAMP_NTZ). [[normalizeTs]] maps both onto the same column type.
     */
-  def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def rawEvents(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/events.parquet")
-  }
 
   /** Normalize `ts` to session-zone TimestampType whatever the physical
     * encoding: Long epoch-nanos → floor to µs (the truncation DuckDB's

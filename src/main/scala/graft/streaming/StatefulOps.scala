@@ -61,7 +61,6 @@ object StatefulOps {
       queryName: String = "graft_sessions",
       statePartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcDir = StreamingOps.asSourceDir(eventsPath)
     val schema = spark.read.parquet(srcDir).schema
     val events = graft.sources.Tables.normalizeTs(
@@ -97,7 +96,6 @@ object StatefulOps {
       keyCols: Seq[String], watermark: String = "1 hour",
       queryName: String = "graft_stream_dedup",
       statePartitions: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcDir = StreamingOps.asSourceDir(eventsPath)
     val schema = spark.read.parquet(srcDir).schema
     val stream = graft.sources.Tables.normalizeTs(
@@ -125,7 +123,6 @@ object StatefulOps {
       intervalSeconds: Long = 3600L,
       queryName: String = "graft_stream_join",
       statePartitions: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcDir = StreamingOps.asSourceDir(eventsPath)
     val schema = spark.read.parquet(srcDir).schema
     def side(eventType: String, prefix: String) =

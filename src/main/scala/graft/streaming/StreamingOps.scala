@@ -120,8 +120,6 @@ object StreamingOps {
   def windowedEventCounts(spark: SparkSession, eventsPath: String,
       window: String = "6 hours", queryName: String = "graft_stream_agg",
       statePartitions: Option[Int] = None): DataFrame = {
-    // corpus-vintage-dependent ts encoding: see Tables.normalizeTs
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcDir = asSourceDir(eventsPath)
     val schema = spark.read.parquet(srcDir).schema
     val stream = graft.sources.Tables.normalizeTs(
@@ -153,7 +151,6 @@ object StreamingOps {
       streamKey: String = "user_id",
       queryName: String = "graft_stream_enrich",
       statePartitions: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcDir = asSourceDir(eventsPath)
     val schema = spark.read.parquet(srcDir).schema
     val stream = graft.sources.Tables.normalizeTs(
@@ -319,7 +316,6 @@ object StreamingOps {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // pass `baseDir` to make the table durable across calls: the
     // checkpoint skips already-processed source files and the persisted
     // bucket->generation metadata resumes where the last run committed
@@ -545,20 +541,12 @@ object StreamingOps {
     import java.nio.file.Files
     import graft.operators.SketchOps
     import org.apache.spark.sql.expressions.Window
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prevNanos = spark.conf.getOption(nanosKey)
-    spark.conf.set(nanosKey, "true")
     val base = Files.createTempDirectory(s"graft_cms_$queryName")
     val src = base.resolve("src")
-    try {
-      graft.sources.Tables.normalizeTs(
-          spark.read.parquet(asSourceDir(eventsPath)))
-        .select(col("user_id")).repartition(splits)
-        .write.parquet(src.toString)
-    } finally prevNanos match {
-      case Some(v) => spark.conf.set(nanosKey, v)
-      case None    => spark.conf.unset(nanosKey)
-    }
+    graft.sources.Tables.normalizeTs(
+        spark.read.parquet(asSourceDir(eventsPath)))
+      .select(col("user_id")).repartition(splits)
+      .write.parquet(src.toString)
     val schema = spark.read.parquet(src.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
@@ -589,26 +577,15 @@ object StreamingOps {
       diagnostics: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     import java.nio.file.Files
     import graft.operators.SketchOps
-    // nanosAsLong is only needed while the vintage events file is read
-    // and re-written below (both eager) — scope it instead of mutating
-    // the session for the rest of its life (ADVICE r12)
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prevNanos = spark.conf.getOption(nanosKey)
-    spark.conf.set(nanosKey, "true")
     val base = Files.createTempDirectory(s"graft_sliding_$queryName")
     // normalize the vintage-dependent ts ONCE, then re-split so
     // AvailableNow + maxFilesPerTrigger=1 exercises several
     // micro-batches (the q66/q76 discipline)
     val src = base.resolve("src")
-    try {
-      graft.sources.Tables.normalizeTs(
-          spark.read.parquet(asSourceDir(eventsPath)))
-        .select(col("ts"), col("user_id")).repartition(splits)
-        .write.parquet(src.toString)
-    } finally prevNanos match {
-      case Some(v) => spark.conf.set(nanosKey, v)
-      case None    => spark.conf.unset(nanosKey)
-    }
+    graft.sources.Tables.normalizeTs(
+        spark.read.parquet(asSourceDir(eventsPath)))
+      .select(col("ts"), col("user_id")).repartition(splits)
+      .write.parquet(src.toString)
     val schema = spark.read.parquet(src.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool (VERDICT r3 stretch): extend the ScaleProbe curve one decade
+/** Dev tool (VERDICT r3 stretch): extend the BASELINE.md scale sweep one decade
   * past the driver-generated corpus for the five heaviest operators
   * (dd06, dp01, tx06, q51, q66) — the first point where per-row compute
   * should clear the fixed-overhead floor, turning "flat wall time" into
@@ -149,14 +149,8 @@ object Sf1Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.withEngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cores = graft.GraftSession.defaultCores
+    val spark = graft.GraftSession.local(cores)
     spark.sparkContext.setLogLevel("ERROR")
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = "/tmp/graft_sf1"
@@ -191,7 +185,7 @@ object Sf1Probe {
         // (VERDICT r17 #3), so envelopes recorded here stay comparable
         spark.conf.set(
           "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          graft.GraftSession.initialPartitions(cpus.toInt,
+          graft.GraftSession.initialPartitions(cores,
             graft.GraftSession.dirBytes(sf)).toString)
         val t0 = System.nanoTime()
         cat(n).fn(spark, sf).write.format("noop").mode("overwrite").save()

@@ -69,14 +69,41 @@ class GraftSessionSpec extends AnyFunSuite {
         Some("/dev/shm/graft-spark-local")
       else None
     assert(GraftSession.scratchDir == expected)
-    // withEngineDefaults is a no-op builder pass-through when unset — pinned
-    // indirectly: the session this suite runs on was built through it
+    // the factory passes the builder through when unset — pinned
+    // indirectly: the session this suite runs on was built by it
     assert(TestSpark.spark.sparkContext.getConf
       .getOption("spark.local.dir") == expected)
+  }
+
+  test("every factory session carries the engine-wide confs") {
+    val s = TestSpark.spark
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "false")
+    assert(s.conf.get("spark.sql.cteRecursionLevelLimit") == "10000")
     // the sort-based shuffle writer is pinned engine-wide (the bypass
     // writer's per-reducer file concat was the measured round-18 lock)
-    assert(TestSpark.spark.sparkContext.getConf
+    assert(s.sparkContext.getConf
       .get("spark.shuffle.sort.bypassMergeThreshold") == "0")
+  }
+
+  test("under a preset spark.master (spark-submit) the factory still " +
+      "applies the engine confs and leaves sizing to the cluster") {
+    val s = TestSpark.spark
+    val sizing = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val tz = "spark.sql.session.timeZone"
+    val before = s.conf.get(sizing)
+    s.conf.set(tz, "America/New_York")
+    sys.props("spark.master") = "local[2]"
+    try {
+      val submitted = GraftSession.local(cores = 4, inputBytes = 100L << 30)
+      assert(submitted.conf.get(tz) == "UTC")
+      assert(submitted.conf.get(sizing) == before)
+    } finally {
+      sys.props -= "spark.master"
+      s.conf.set(tz, "UTC")
+    }
   }
 
   test("scratchDir free-space floor: a too-small tmpfs falls back to " +

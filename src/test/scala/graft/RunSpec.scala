@@ -21,6 +21,29 @@ class RunSpec extends AnyFunSuite {
       .exists(a => a.explain && a.command == "q01_agg"))
   }
 
+  test("parse: a comma list or `all` is accepted only with --explain") {
+    assert(Run.parse(Array("q01_agg,q02_x")).isLeft)
+    assert(Run.parse(Array("all", "--out", "/o")).isLeft)
+    assert(Run.parse(Array("q01_agg,q02_x", "--explain")) ==
+      Right(Run.Args("q01_agg,q02_x", "/root/testdata/sf0.001", None, 20,
+        explain = true)))
+    assert(Run.parse(Array("all", "--explain", "--out", "/o"))
+      .exists(a => a.command == "all" && a.out.contains("/o")))
+  }
+
+  test("explain --out DIR writes one plan file per query") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plans")
+    Run.explain(TestSpark.spark,
+      Run.Args("q01_pricing_summary,q03_join_agg", "/root/testdata/sf0.001",
+        Some(dir.toString), 20, explain = true))
+    val files = dir.toFile.list().toSet
+    assert(files == Set("q01_pricing_summary.txt", "q03_join_agg.txt"))
+    files.foreach { f =>
+      val plan = java.nio.file.Files.readString(dir.resolve(f))
+      assert(plan.contains("Physical Plan") && plan.contains("Scan parquet"))
+    }
+  }
+
   test("explain: the resolved frame renders a formatted physical plan") {
     val spark = TestSpark.spark
     val df = Run.execute(spark,
